@@ -26,15 +26,7 @@ from pyspark.sql import functions as F
 from .functions.datetime_ops import bangkok_day, partition_key
 from .operators.ticker import SYMBOLS, build_ticker_meta, derive_ticker
 from .sources import read_table
-
-
-def _overwrite_day_partitions(df: DataFrame, path: str) -> None:
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("partition")
-        .parquet(path)
-    )
+from .streaming.merge_util import overwrite_partitions
 
 
 def materialize_ticker(
@@ -53,7 +45,7 @@ def materialize_ticker(
     one_day = ticker.filter(
         partition_key(bangkok_day("created_at")) == day
     ).withColumn("partition", F.lit(day))
-    _overwrite_day_partitions(one_day, out_path)
+    overwrite_partitions(one_day, out_path, "partition")
     return one_day.drop("partition")
 
 
@@ -65,7 +57,7 @@ def analyze_day(
     overwrite that day's partition of the derived table."""
     ticker = spark.read.parquet(ticker_path).filter(F.col("partition") == day)
     meta = build_ticker_meta(ticker.drop("partition"))
-    _overwrite_day_partitions(meta, out_path)
+    overwrite_partitions(meta, out_path, "partition")
     return meta
 
 

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..streaming.merge_util import existing_or_empty
+from ..streaming.merge_util import rewrite_partitions, start_stream
 
 UPSERT_BUCKETS = 64
 
@@ -40,20 +40,16 @@ def upsert_partitioned(
     """
     data_cols = updates.columns
     bucket = F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets))
-    tagged = updates.withColumn("bucket", bucket).persist()
-    buckets = [r["bucket"] for r in tagged.select("bucket").distinct().collect()]
-    if not buckets:
-        tagged.unpersist()
-        return
+    tagged = updates.withColumn("bucket", bucket)
     schema = ", ".join(
         [f"`{f.name}` {f.dataType.simpleString()}" for f in updates.schema.fields]
         + ["`bucket` bigint"]
     )
-    existing = existing_or_empty(
-        spark, path, schema=schema, prune=F.col("bucket").isin(buckets)
-    )
-    merged = (
-        existing.withColumn("__src", F.lit(0))
+    rewrite_partitions(
+        tagged,
+        path,
+        "bucket",
+        lambda existing: existing.withColumn("__src", F.lit(0))
         .unionByName(tagged.withColumn("__src", F.lit(1)))
         .groupBy(*key_cols)
         .agg(
@@ -62,16 +58,9 @@ def upsert_partitioned(
                 F.struct(F.col(version_col).alias("v"), F.col("__src").alias("s")),
             ).alias("__win")
         )
-        .select(*key_cols, "__win.*")
+        .select(*key_cols, "__win.*"),
+        schema=schema,
     )
-    merged = merged.localCheckpoint(eager=True)
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(path)
-    )
-    tagged.unpersist()
 
 
 def read_upserted(spark: SparkSession, path: str) -> DataFrame:
@@ -105,12 +94,9 @@ def upsert_stream_run(
                 spark, path, b, key_cols, version_col
             )
         )
-        .option("checkpointLocation", checkpoint)
         .queryName("upsert_sink")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_stream(writer, checkpoint, available_now)
 
 
 def delete_keys(
@@ -124,38 +110,29 @@ def delete_keys(
     an :func:`upsert_partitioned` table: read ONLY the buckets the key
     set hashes into, anti-join the keys out, dynamically overwrite
     those buckets. Cost is O(touched buckets), not O(table); deleting
-    an absent key is a no-op; idempotent under replay."""
+    an absent key - or from a table not written yet - is a no-op;
+    idempotent under replay."""
     bucket = F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets))
-    tagged = keys.select(*key_cols).distinct().withColumn("bucket", bucket).persist()
-    buckets = [r["bucket"] for r in tagged.select("bucket").distinct().collect()]
-    if not buckets:
-        tagged.unpersist()
-        return
-    try:
-        existing = spark.read.parquet(path).filter(F.col("bucket").isin(buckets))
-    except Exception:
-        tagged.unpersist()
-        raise
-    remaining = existing.join(
-        F.broadcast(tagged.select(*key_cols)), key_cols, "left_anti"
+    tagged = keys.select(*key_cols).distinct().withColumn("bucket", bucket)
+    done = rewrite_partitions(
+        tagged,
+        path,
+        "bucket",
+        lambda existing: existing.join(
+            F.broadcast(tagged.select(*key_cols)), key_cols, "left_anti"
+        ),
     )
-    remaining = remaining.localCheckpoint(eager=True)
+    if done is None:
+        return
+    buckets, remaining = done
     # Dynamic overwrite only replaces partitions PRESENT in the write:
-    # a bucket whose every row was deleted would keep its old files.
-    # Those buckets are removed explicitly through the Hadoop FS.
+    # a bucket whose every row was deleted keeps its old files. Those
+    # buckets are removed explicitly through the Hadoop FS.
     present = {
         r["bucket"] for r in remaining.select("bucket").distinct().collect()
     }
-    if present:
-        (
-            remaining.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(path)
-        )
     jvm = spark._jvm  # type: ignore[attr-defined]
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())  # type: ignore[attr-defined]
     for b in set(buckets) - present:
         fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/bucket={b}"), True)
-    tagged.unpersist()

@@ -2089,7 +2089,7 @@ def statestore_inspect_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..sources.registry import read_stream, table_path
-    from ..streaming import await_finished
+    from ..streaming import await_finished, start_stream
 
     work = tempfile.mkdtemp(prefix="statestore_inspect_")
     src, ckpt = f"{work}/events_in", f"{work}/ckpt"
@@ -2100,14 +2100,8 @@ def statestore_inspect_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    q = (
-        agg.writeStream.format("noop")
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_finished(q)
+    writer = agg.writeStream.format("noop").outputMode("update")
+    await_finished(start_stream(writer, ckpt, available_now=True))
     st = spark.read.format("statestore").load(ckpt)
     return st.select(
         F.col("key.event_type").alias("event_type"),

@@ -453,17 +453,20 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming twin is streaming.sessions.sessionize_stream
     (applyInPandasWithState); stream-batch equivalence is asserted in
     tests."""
-    ev = read_table(spark, sf_dir, "events").withColumn(
-        # timestamp_ntz -> epoch seconds (session tz is pinned UTC, so the
-        # ntz->instant reinterpretation is the identity)
-        "__epoch", F.col("ts").cast("timestamp").cast("long")
+    # timestamp_ntz -> epoch micros / whole seconds (session tz is pinned
+    # UTC, so the ntz->instant reinterpretation is the identity). The gap
+    # test compares microseconds, like the oracle's interval comparison;
+    # duration_s counts whole-second boundaries, like its datediff.
+    instant = F.col("ts").cast("timestamp")
+    ev = read_table(spark, sf_dir, "events").select(
+        "*", F.unix_micros(instant).alias("__us"), instant.cast("long").alias("__epoch")
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     run = Window.partitionBy("user_id").orderBy("ts").rowsBetween(Window.unboundedPreceding, 0)
-    gap = F.col("__epoch") - F.lag("__epoch").over(w)
+    gap = F.col("__us") - F.lag("__us").over(w)
     marked = ev.withColumn(
         "is_start",
-        F.when(gap.isNull() | (gap > SESSION_GAP_MIN * 60), 1).otherwise(0),
+        F.when(gap.isNull() | (gap > SESSION_GAP_MIN * 60 * 1_000_000), 1).otherwise(0),
     )
     numbered = marked.withColumn("session_no", F.sum("is_start").over(run))
     return numbered.groupBy("user_id", "session_no").agg(

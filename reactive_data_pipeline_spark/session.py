@@ -65,6 +65,30 @@ ENGINE_CONF: dict[str, str] = {
 }
 
 
+#: Ceiling of the derived local driver heap, in MiB (a real executor's size).
+MAX_LOCAL_HEAP_MB = 16 * 1024
+
+
+def local_cores() -> int:
+    """Cores this process may run on."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API (macOS)
+        return os.cpu_count() or 1
+
+
+def local_heap(meminfo: str = "/proc/meminfo") -> str:
+    """Local-mode driver heap: half the host's ``MemTotal``, at most
+    :data:`MAX_LOCAL_HEAP_MB`, as a JVM size string. Hosts without
+    ``/proc/meminfo`` get the ceiling."""
+    try:
+        with open(meminfo) as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return f"{MAX_LOCAL_HEAP_MB}m"
+    return f"{max(min(kb // 2048, MAX_LOCAL_HEAP_MB), 1)}m"
+
+
 def get_spark(
     app_name: str = "reactive-data-pipeline-spark",
     master: str | None = None,
@@ -73,13 +97,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    when no cluster master is configured - on a real cluster, submit with
-    ``--master`` and pass ``master=None``.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default
+    :func:`local_cores`) when no cluster master is configured - on a real
+    cluster, submit with ``--master`` and pass ``master=None``.
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None and "SPARK_MASTER" not in os.environ:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or local_cores()
         master = f"local[{cpus}]"
     if master:
         builder = builder.master(master)
@@ -89,12 +113,12 @@ def get_spark(
         # -Xmx is 1g regardless of machine size - measured at 10x bench
         # volume, accumulated broadcast/shuffle state across queries
         # OOMs a 1g heap ("Not enough memory to build and broadcast")
-        # while the host sits on >100 GiB free. Size the heap like a
-        # real executor; only effective at JVM launch (getOrCreate
+        # while the host sits on >100 GiB free. Size the heap from the
+        # host (local_heap); only effective at JVM launch (getOrCreate
         # reuse and cluster submits are untouched), and explicit
         # extra_conf/env still wins.
         conf.setdefault(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or local_heap()
         )
     if shuffle_partitions is not None:
         conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)

@@ -34,7 +34,7 @@ from .join import (
     stream_join_outer_run,
     stream_join_run,
 )
-from .merge_util import await_finished, existing_or_empty
+from .merge_util import await_finished, existing_or_empty, start_stream
 from .neardup import (
     neardup_registry_batch,
     read_neardup_pairs,
@@ -44,6 +44,7 @@ from .neardup import (
 __all__ = [
     "await_finished",
     "existing_or_empty",
+    "start_stream",
     "neardup_registry_batch",
     "read_neardup_pairs",
     "streaming_neardup_run",

@@ -35,7 +35,7 @@ from ..functions.text import fingerprint_md5, lang_id, quality_score
 from ..functions.chunking import chunk_documents, pack_bins
 from ..operators.relational import evaluate_once
 from ..sources.registry import read_stream
-from .merge_util import existing_or_empty
+from .merge_util import existing_or_empty, start_stream
 
 REGISTRY_SCHEMA = "fingerprint string, doc_id long"
 
@@ -113,7 +113,5 @@ def corpus_ingest_run(
     )
     writer = docs.writeStream.foreachBatch(
         lambda b, i: ingest_batch(b, i, registry_path, shards_root)
-    ).option("checkpointLocation", checkpoint)
-    if available_now:
-        return writer.trigger(availableNow=True).start()
-    return writer.trigger(processingTime="1 second").start()
+    )
+    return start_stream(writer, checkpoint, available_now)

@@ -30,7 +30,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.text import fingerprint_md5
 from ..sources.registry import read_stream
-from .merge_util import existing_or_empty
+from .merge_util import rewrite_partitions, start_stream
 
 #: Bucket count for the materialized registry. At harness scale this is
 #: plumbing; at corpus scale set it so one bucket's registry shard fits
@@ -67,14 +67,8 @@ def streaming_dedup_run(
     def _sink(batch: DataFrame, _batch_id: int) -> None:
         batch.write.mode("overwrite").parquet(out_path)
 
-    writer = (
-        registry.writeStream.outputMode("complete")
-        .foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        return writer.trigger(availableNow=True).start()
-    return writer.trigger(processingTime="1 second").start()
+    writer = registry.writeStream.outputMode("complete").foreachBatch(_sink)
+    return start_stream(writer, checkpoint, available_now)
 
 
 def merge_dedup_registry_batch(updates: DataFrame, out_path: str) -> None:
@@ -95,38 +89,21 @@ def merge_dedup_registry_batch(updates: DataFrame, out_path: str) -> None:
        pruning on the ``bucket`` column - O(touched), not O(table));
     3. union + monotone re-aggregate, dynamic-overwrite those buckets.
     """
-    spark = updates.sparkSession
     partial = updates.withColumn(
         "bucket", F.pmod(F.xxhash64("fingerprint"), F.lit(REGISTRY_BUCKETS))
-    ).persist()
-    buckets = [r["bucket"] for r in partial.select("bucket").distinct().collect()]
-    if not buckets:
-        partial.unpersist()
-        return
-    existing = existing_or_empty(
-        spark, out_path, partial, prune=F.col("bucket").isin(buckets)
     )
-    merged = (
-        existing.unionByName(partial)
+    rewrite_partitions(
+        partial,
+        out_path,
+        "bucket",
+        lambda existing: existing.unionByName(partial)
         .groupBy("fingerprint")
         .agg(
             F.min("keeper_doc_id").alias("keeper_doc_id"),
             F.max("n_copies").alias("n_copies"),
             F.min("bucket").alias("bucket"),  # constant per fingerprint
-        )
+        ),
     )
-    # Materialize before writing: the overwrite targets the very files
-    # the plan reads, and only dynamic-overwrite's deferred deletion
-    # makes that safe today - a checkpointed result removes the
-    # read-what-you-delete dependency entirely.
-    merged = merged.localCheckpoint(eager=True)
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(out_path)
-    )
-    partial.unpersist()
 
 
 def streaming_dedup_update_run(
@@ -143,11 +120,7 @@ def streaming_dedup_update_run(
     mode's O(registry) re-emit - the difference between a registry that
     scales with the corpus and one that scales with the batch."""
     registry = dedup_registry_stream(spark, src_dir)
-    writer = (
-        registry.writeStream.outputMode("update")
-        .foreachBatch(lambda b, _id: merge_dedup_registry_batch(b, out_path))
-        .option("checkpointLocation", checkpoint)
+    writer = registry.writeStream.outputMode("update").foreachBatch(
+        lambda b, _id: merge_dedup_registry_batch(b, out_path)
     )
-    if available_now:
-        return writer.trigger(availableNow=True).start()
-    return writer.trigger(processingTime="1 second").start()
+    return start_stream(writer, checkpoint, available_now)

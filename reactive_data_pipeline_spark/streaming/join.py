@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.registry import read_stream
+from .merge_util import start_stream
 
 
 def click_purchase_pairs(clicks: DataFrame, purchases: DataFrame, window_s: int) -> DataFrame:
@@ -89,15 +90,8 @@ def stream_join_run(
     events = read_stream(spark, src_dir, "events", max_files_per_trigger=max_files_per_trigger)
     clicks, purchases = _split(events, watermark)
     pairs = click_purchase_pairs(clicks, purchases, window_s)
-    writer = (
-        pairs.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = pairs.writeStream.format("parquet").option("path", out_path).outputMode("append")
+    return start_stream(writer, checkpoint, available_now)
 
 
 def purchase_click_pairs_outer(
@@ -164,18 +158,7 @@ def stream_join_outer_run(
     events = read_stream(
         spark, src_dir, "events", max_files_per_trigger=max_files_per_trigger
     )
-    ev = events.withColumn("ts", F.col("ts").cast("timestamp")).withWatermark(
-        "ts", watermark
-    )
-    clicks = ev.filter(F.col("event_type") == "click")
-    purchases = ev.filter(F.col("event_type") == "purchase")
+    clicks, purchases = _split(events, watermark)
     pairs = purchase_click_pairs_outer(clicks, purchases, window_s)
-    writer = (
-        pairs.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = pairs.writeStream.format("parquet").option("path", out_path).outputMode("append")
+    return start_stream(writer, checkpoint, available_now)

@@ -43,7 +43,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..dedup.simhash import _BAND_BITS, _BANDS, simhash_docs
 from ..sources.registry import read_stream
-from .merge_util import existing_or_empty
+from .merge_util import existing_or_empty, start_stream
 
 NEARDUP_REGISTRY_SCHEMA = (
     "doc_id long, simhash long, band int, bv long, rbucket long"
@@ -155,10 +155,8 @@ def streaming_neardup_run(
         lambda b, i: neardup_registry_batch(
             b, i, registry_path, pairs_root, max_hamming
         )
-    ).option("checkpointLocation", checkpoint)
-    if available_now:
-        return writer.trigger(availableNow=True).start()
-    return writer.trigger(processingTime="1 second").start()
+    )
+    return start_stream(writer, checkpoint, available_now)
 
 
 def read_neardup_pairs(spark: SparkSession, pairs_root: str) -> DataFrame:

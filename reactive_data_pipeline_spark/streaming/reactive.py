@@ -32,7 +32,7 @@ from pyspark.sql.streaming import StreamingQueryListener
 
 from ..operators.ticker import build_ticker_meta, derive_ticker
 from ..sources.registry import read_stream
-from .merge_util import existing_or_empty
+from .merge_util import CONTINUOUS_TRIGGER, rewrite_partitions, start_stream
 from .. import schemas
 
 
@@ -80,39 +80,21 @@ def merge_ticker_meta_batch(batch: DataFrame, out_path: str) -> None:
     2. read ONLY those day partitions of the existing table (partition
        pruning on the ``partition`` column);
     3. union + re-aggregate (monotone merge) and overwrite just those
-       partitions (dynamic partitionOverwriteMode).
+       partitions (``merge_util.rewrite_partitions``).
     """
-    spark = batch.sparkSession
-    # Persist the tiny partial aggregate: it is consumed twice (affected-day
-    # listing + merge write) and caching avoids re-reading the batch files.
-    partial = build_ticker_meta(derive_ticker(batch)).persist()
-    days = [r["partition"] for r in partial.select("partition").distinct().collect()]
-    if not days:
-        partial.unpersist()
-        return
-    existing = existing_or_empty(
-        spark, out_path, partial, prune=F.col("partition").isin(days)
-    )
-    merged = (
-        existing.unionByName(partial)
+    partial = build_ticker_meta(derive_ticker(batch))
+    rewrite_partitions(
+        partial,
+        out_path,
+        "partition",
+        lambda existing: existing.unionByName(partial)
         .groupBy("symbol", "partition")
         .agg(
             F.max("monthly_max_market_price").alias("monthly_max_market_price"),
             F.min("monthly_min_market_price").alias("monthly_min_market_price"),
         )
-        .select("symbol", "monthly_max_market_price", "monthly_min_market_price", "partition")
+        .select("symbol", "monthly_max_market_price", "monthly_min_market_price", "partition"),
     )
-    # Materialize before writing: the overwrite targets the very files
-    # the plan reads; a checkpointed result removes that dependency
-    # instead of leaning on dynamic-overwrite's deferred deletion.
-    merged = merged.localCheckpoint(eager=True)
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("partition")
-        .parquet(out_path)
-    )
-    partial.unpersist()
 
 
 def reactive_ticker_meta_run(
@@ -121,7 +103,7 @@ def reactive_ticker_meta_run(
     out_path: str,
     checkpoint_dir: str,
     available_now: bool = True,
-    processing_time: str = "10 seconds",
+    processing_time: str = CONTINUOUS_TRIGGER,
     dedup_watermark: str | None = "2 hours",
     observe: bool = True,
     max_files_per_trigger: int | None = None,
@@ -159,16 +141,10 @@ def reactive_ticker_meta_run(
             F.count(F.lit(1)).alias("rows"),
             F.max("ts").alias("max_ts"),
         )
-    writer = (
-        ev.writeStream.foreachBatch(lambda b, _id: merge_ticker_meta_batch(b, out_path))
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("reactive_ticker_meta")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    writer = ev.writeStream.foreachBatch(
+        lambda b, _id: merge_ticker_meta_batch(b, out_path)
+    ).queryName("reactive_ticker_meta")
+    return start_stream(writer, checkpoint_dir, available_now, processing_time)
 
 
 def read_ticker_meta(spark: SparkSession, out_path: str) -> DataFrame:
@@ -211,7 +187,6 @@ def stream_to_jdbc(
     table: str,
     checkpoint_dir: str,
     available_now: bool = True,
-    processing_time: str = "10 seconds",
 ):
     """Stream into an external JDBC table via ``foreachBatch``,
     idempotently per micro-batch.
@@ -226,8 +201,6 @@ def stream_to_jdbc(
     earlier partial write instead of duplicating it. Returns the
     StreamingQuery.
     """
-    import pyspark.sql.functions as F
-
     from ..sources.registry import write_jdbc
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
@@ -255,13 +228,5 @@ def stream_to_jdbc(
             conn.close()
         write_jdbc(batch.withColumn("_batch_id", F.lit(int(batch_id))), url, table, mode="append")
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(f"jdbc_sink_{table}")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    writer = stream_df.writeStream.foreachBatch(_sink).queryName(f"jdbc_sink_{table}")
+    return start_stream(writer, checkpoint_dir, available_now)

@@ -56,7 +56,8 @@ SESSION_OUT = StructType(
     ]
 )
 
-#: (session_no, start_epoch, last_epoch, n_events, value_sum)
+#: (session_no, start_us, last_us, n_events, value_sum); times are epoch
+#: microseconds, so the gap test sees sub-second differences.
 SESSION_STATE = StructType(
     [
         StructField("session_no", LongType()),
@@ -68,6 +69,15 @@ SESSION_STATE = StructType(
 )
 
 
+_US = 1_000_000
+
+
+def _whole_s(start_us: int, last_us: int) -> int:
+    """Whole-second boundaries crossed between two epoch-micro instants
+    (the batch query's ``duration_s``)."""
+    return last_us // _US - start_us // _US
+
+
 def _fold_user(
     key: Tuple[int], pdfs: Iterator[pd.DataFrame], state: GroupState, gap_s: int
 ) -> Iterator[pd.DataFrame]:
@@ -77,18 +87,19 @@ def _fold_user(
     else:
         session_no, start, last, n, val = 0, None, None, 0, 0.0
     out: list[tuple] = []
+    gap_us = gap_s * _US
     for pdf in pdfs:
-        pdf = pdf.sort_values(["__epoch", "event_id"])
-        for epoch, value in zip(pdf["__epoch"], pdf["value"]):
-            epoch = int(epoch)
-            if start is not None and epoch - last <= gap_s:
-                last, n, val = epoch, n + 1, val + float(value)
+        pdf = pdf.sort_values(["__us", "event_id"])
+        for us, value in zip(pdf["__us"], pdf["value"]):
+            us = int(us)
+            if start is not None and us - last <= gap_us:
+                last, n, val = us, n + 1, val + float(value)
             else:
                 if start is not None:  # close the previous session
-                    out.append((user_id, session_no, n, last - start, val, True))
-                session_no, start, last, n, val = session_no + 1, epoch, epoch, 1, float(value)
+                    out.append((user_id, session_no, n, _whole_s(start, last), val, True))
+                session_no, start, last, n, val = session_no + 1, us, us, 1, float(value)
     if start is not None:  # running totals of the open session
-        out.append((user_id, session_no, n, last - start, val, False))
+        out.append((user_id, session_no, n, _whole_s(start, last), val, False))
     state.update((session_no, start, last, n, val))
     yield pd.DataFrame(out, columns=[f.name for f in SESSION_OUT.fields])
 
@@ -97,10 +108,10 @@ def sessionize_stream(events: DataFrame, gap_min: int = SESSION_GAP_MIN) -> Data
     """events (streaming, with ts/user_id/event_id/value) -> per-session
     rows as described in the module docstring."""
     gap_s = gap_min * 60
-    with_epoch = events.withColumn(
-        "__epoch", F.col("ts").cast("timestamp").cast("long")
-    ).select("user_id", "event_id", "__epoch", "value")
-    return with_epoch.groupBy("user_id").applyInPandasWithState(
+    with_us = events.select(
+        "user_id", "event_id", F.unix_micros(F.col("ts").cast("timestamp")).alias("__us"), "value"
+    )
+    return with_us.groupBy("user_id").applyInPandasWithState(
         lambda key, pdfs, state: _fold_user(key, pdfs, state, gap_s),
         outputStructType=SESSION_OUT,
         stateStructType=SESSION_STATE,

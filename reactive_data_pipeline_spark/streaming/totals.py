@@ -38,6 +38,8 @@ from pyspark.sql.streaming.stateful_processor import (
 )
 from pyspark.sql.types import LongType, StructField, StructType
 
+from .merge_util import start_stream
+
 TOTALS_OUT = StructType(
     [
         StructField("user_id", LongType()),
@@ -131,15 +133,7 @@ def user_totals_run(
     def _sink(batch: DataFrame, _batch_id: int) -> None:
         batch.write.mode("append").parquet(out_path)
 
-    writer = (
-        totals.writeStream.outputMode("update")
-        .foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 second")
+    writer = totals.writeStream.outputMode("update").foreachBatch(_sink)
     try:
         prior = spark.conf.get(_PROVIDER_KEY)
     except Exception:
@@ -149,7 +143,7 @@ def user_totals_run(
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     try:
-        return writer.start()
+        return start_stream(writer, checkpoint, available_now)
     finally:
         if prior is None:
             spark.conf.unset(_PROVIDER_KEY)

@@ -5,7 +5,7 @@ shapes (hot keys, ties, empty groups) that fixed fixtures miss."""
 
 from __future__ import annotations
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 SLOW = settings(max_examples=5, deadline=None)
@@ -96,12 +96,18 @@ def test_minhash_pairs_respect_threshold_and_symmetry(spark, texts):
 @SLOW
 @given(
     st.lists(
-        st.tuples(st.integers(0, 1), st.integers(0, 10_000)), min_size=1, max_size=40
+        # (user, epoch micros): up to ~3 h, so gaps straddle the 30 min rule
+        st.tuples(st.integers(0, 1), st.integers(0, 10_000_000_000)), min_size=1, max_size=40
     )
 )
+# 1800.07 s apart: a new session, although whole epoch seconds differ by
+# exactly the 1800 s gap; and exactly 1800 s apart: the same session.
+@example([(0, 500_000), (0, 1_800_570_000)])
+@example([(0, 500_000), (0, 1_800_500_000)])
 def test_sessionize_stream_fold_matches_batch_rule(spark, rows_in):
     """The applyInPandasWithState fold (single batch) must agree with the
-    batch lag+running-sum sessionization on any event set."""
+    batch lag+running-sum sessionization on any event set: gaps compared
+    in microseconds, durations in whole seconds."""
     from reactive_data_pipeline_spark.streaming.sessions import (
         SESSION_GAP_MIN,
         _fold_user,
@@ -123,25 +129,25 @@ def test_sessionize_stream_fold_matches_batch_rule(spark, rows_in):
     got = {}
     for u, evs in by_user.items():
         pdf = pd.DataFrame(
-            {"event_id": [i for i, _ in evs], "__epoch": [t for _, t in evs],
+            {"event_id": [i for i, _ in evs], "__us": [t for _, t in evs],
              "value": [1.0] * len(evs)}
         )
         for out in _fold_user((u,), iter([pdf]), FakeState(), gap_s):
             for r in out.itertuples():
                 got[(r.user_id, r.session_no)] = (r.n_events, r.duration_s)
-    # reference model: sort by ts, break at gap > gap_s
+    # reference model: sort by ts, break at gap > gap_s (in micros)
     expected = {}
     for u, evs in by_user.items():
         ts = sorted(t for _, t in evs)
         sno, start, last, n = 0, None, None, 0
         for t in ts:
-            if start is not None and t - last <= gap_s:
+            if start is not None and t - last <= gap_s * 1_000_000:
                 last, n = t, n + 1
             else:
                 if start is not None:
-                    expected[(u, sno)] = (n, last - start)
+                    expected[(u, sno)] = (n, last // 1_000_000 - start // 1_000_000)
                 sno, start, last, n = sno + 1, t, t, 1
-        expected[(u, sno)] = (n, last - start)
+        expected[(u, sno)] = (n, last // 1_000_000 - start // 1_000_000)
     assert got == expected
 
 

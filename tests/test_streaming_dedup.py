@@ -3,15 +3,22 @@ incremental convergence as new document files arrive."""
 
 from __future__ import annotations
 
+import glob
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from reactive_data_pipeline_spark.dedup import exact_dedup_groups
+from reactive_data_pipeline_spark.operators.upsert import upsert_partitioned
 from reactive_data_pipeline_spark.sources import read_table
 from reactive_data_pipeline_spark.streaming import (
     merge_dedup_registry_batch,
+    merge_ticker_meta_batch,
     streaming_dedup_run,
     streaming_dedup_update_run,
 )
+from reactive_data_pipeline_spark.streaming.scd2 import merge_scd2_batch
 
 from .conftest import SF_DIR
 from .helpers import assert_df_equal
@@ -97,8 +104,6 @@ def test_update_mode_incremental_and_bucket_pruned(spark, tmp_path):
     q.awaitTermination(120)
     assert_df_equal(_registry(spark, out), exact_dedup_groups(docs))
     # Hive-style bucket partition dirs prove the dynamic-overwrite layout.
-    import os
-
     assert any(d.startswith("bucket=") for d in os.listdir(out))
 
 
@@ -121,33 +126,57 @@ def test_merge_replay_is_noop(spark, tmp_path):
     assert pd_sort(after_full).equals(pd_sort(final))
 
 
-def test_merge_fails_on_corrupt_registry_instead_of_data_loss(spark, tmp_path):
-    """A transient/corrupt read of a NON-EMPTY registry must fail the
-    micro-batch (checkpoint retries it) - never be treated as 'first
-    batch', which would dynamic-overwrite the touched buckets from the
-    batch alone and silently delete co-bucketed entries."""
-    import pytest
+def _merge_ticker(spark, out):
+    merge_ticker_meta_batch(read_table(spark, SF_DIR, "events"), out)
 
-    out = str(tmp_path / "registry")
+
+def _merge_dedup(spark, out):
     docs = read_table(spark, SF_DIR, "documents").limit(20)
-    updates = exact_dedup_groups(docs)
-    merge_dedup_registry_batch(updates, out)
-    n_before = spark.read.parquet(out).count()
-    assert n_before > 0
+    merge_dedup_registry_batch(exact_dedup_groups(docs), out)
 
-    # corrupt every parquet footer under the registry root
-    import glob as _glob
-    import os
 
-    for f in _glob.glob(f"{out}/**/*.parquet", recursive=True):
+def _merge_scd2(spark, out):
+    merge_scd2_batch(read_table(spark, SF_DIR, "events"), out)
+
+
+def _merge_upsert(spark, out):
+    rows = spark.createDataFrame(
+        [(i, f"v{i}", 1) for i in range(20)], "id long, val string, ver long"
+    )
+    upsert_partitioned(spark, out, rows, ["id"], "ver")
+
+
+def _cached_frames(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
+@pytest.mark.parametrize(
+    "merge",
+    [_merge_ticker, _merge_dedup, _merge_scd2, _merge_upsert],
+    ids=["ticker", "dedup", "scd2", "upsert"],
+)
+def test_merge_fails_on_corrupt_registry_instead_of_data_loss(spark, tmp_path, merge):
+    """A transient/corrupt read of a NON-EMPTY derived table must fail
+    the micro-batch (checkpoint retries it) - never be treated as 'first
+    batch', which would dynamic-overwrite the touched partitions from
+    the batch alone and silently delete co-located entries. The failed
+    merge must not leave its cached batch behind either."""
+    out = str(tmp_path / "table")
+    merge(spark, out)
+    assert spark.read.parquet(out).count() > 0
+
+    # corrupt every parquet footer under the table root
+    for f in glob.glob(f"{out}/**/*.parquet", recursive=True):
         with open(f, "r+b") as fh:
             fh.seek(0, os.SEEK_END)
             size = fh.tell()
             fh.truncate(max(4, size // 2))
+    cached = _cached_frames(spark)
     with pytest.raises(Exception) as exc:
-        merge_dedup_registry_batch(updates, out)
+        merge(spark, out)
     # the failure is a read error, not a silent success
     assert "PATH_NOT_FOUND" not in str(exc.value)
+    assert _cached_frames(spark) <= cached
 
 
 def test_merge_bootstraps_only_on_missing_path(spark, tmp_path):

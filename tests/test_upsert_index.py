@@ -189,3 +189,20 @@ def test_delete_keys_erases_fully_emptied_bucket(spark, tmp_path):
         "ver",
     )
     assert _rows(spark, p) == [(1, "fresh", 1)]
+
+
+def test_delete_keys_on_unwritten_table_is_noop(spark, tmp_path):
+    """Deleting from a table that was never written deletes nothing,
+    and the table can still be created by a later upsert."""
+    from reactive_data_pipeline_spark.operators.upsert import delete_keys
+
+    p = f"{tmp_path}/dim"
+    delete_keys(spark, p, spark.createDataFrame([(1,)], "id long"), ["id"])
+    upsert_partitioned(
+        spark,
+        p,
+        spark.createDataFrame([(1, "a", 1)], "id long, val string, ver long"),
+        ["id"],
+        "ver",
+    )
+    assert _rows(spark, p) == [(1, "a", 1)]
